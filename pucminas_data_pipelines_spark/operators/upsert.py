@@ -1,21 +1,24 @@
-"""Versioned mutable table: the reference's distinctive Delta feature set
-(overwrite → MERGE upsert → time travel → manifest; SURVEY.md §7 M3,
-reference O5/O10/O11/O15/O16 at sparkcode/titanic_example_delta.py:25-72)
-re-expressed with a thin Parquet version directory when delta-spark is
-absent (it is, in this container).
+"""Versioned mutable tables: the reference's distinctive Delta feature
+set (overwrite → MERGE upsert → time travel → manifest; SURVEY.md §7 M3,
+reference O5/O10/O11/O15/O16 at sparkcode/titanic_example_delta.py:25-72).
 
-Layout:  <path>/v=<N>/  (full snapshot per version, parquet)
-         <path>/_LATEST (text file with the max committed version)
-
-This is deliberately NOT a reimplementation of Delta's transaction log —
-a snapshot-per-version façade with last-writer-wins commit is enough to
-reproduce the reference's semantics (its job runs single-writer). When
-delta-spark IS installed, DeltaVersionedTable delegates to the real thing.
+- ``ManifestVersionedTable`` (the production path when delta-spark is
+  absent, as it is here): a version is a manifest — a per-bucket list of
+  immutable data directories — so commits write O(changed buckets),
+  time travel is O(manifest), and MERGE/DELETE rewrite only the buckets
+  they touch. Commits are optimistic and put-if-absent: a loser of a
+  race gets ConcurrentWriteError, and ``commit_staged`` rebases a staged
+  transaction onto the newer versions when they do not conflict. The
+  on-disk log (manifests, latest-version hint, atomic publish, deletion-
+  vector sidecars) is owned by ``manifest_log``.
+- ``ParquetVersionedTable``: the minimal snapshot façade — one full
+  Parquet snapshot per version under ``<path>/v=<N>/``, last writer
+  wins. Kept as the small reference implementation and oracle.
+- ``DeltaVersionedTable``: delegates to delta-spark when it is installed.
 
 Scale: MERGE is a full-outer join on the key — shuffle-partitioned on the
 merge key on both sides, or broadcast when the source is small (the
-reference's own merge has a 4-row source). Each version is a full rewrite
-here; Delta's file-level pruning is the production path.
+reference's own merge has a 4-row source).
 """
 
 from __future__ import annotations
@@ -25,12 +28,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pucminas_data_pipelines_spark import manifest_log as log
+from pucminas_data_pipelines_spark.manifest_log import ConcurrentWriteError
 from pucminas_data_pipelines_spark.session import delta_available
-
-
-class ConcurrentWriteError(RuntimeError):
-    """A concurrent writer committed the same table version first
-    (optimistic-concurrency conflict — re-read and retry)."""
 
 
 def _parse_bytes(v: str, default: int) -> int:
@@ -48,6 +48,16 @@ def _parse_bytes(v: str, default: int) -> int:
         return int(s)
     except Exception:
         return default
+
+
+def _write_symlink_manifest(root: str, files: list[str]) -> str:
+    """O16: publish the symlink-format manifest (one data-file path per
+    line) atomically — external catalogs never see a torn list."""
+    manifest_dir = os.path.join(root, "_symlink_format_manifest")
+    os.makedirs(manifest_dir, exist_ok=True)
+    out = os.path.join(manifest_dir, "manifest")
+    log.atomic_write(out, "\n".join(files) + "\n")
+    return out
 
 
 def _reject_ambiguous_merge_source(source: DataFrame, key: str) -> None:
@@ -81,33 +91,15 @@ class ParquetVersionedTable:
         self.path = path.rstrip("/")
 
     # -- version bookkeeping -------------------------------------------
-    def _latest_file(self) -> str:
-        return os.path.join(self.path, "_LATEST")
-
-    def _publish_latest(self, version: int) -> None:
-        """Atomically repoint _LATEST (temp file + os.replace): a plain
-        truncate-write leaves a window where a concurrent reader — the
-        stream sources poll _LATEST every trigger — sees an EMPTY file
-        and crashes on int('') (caught live by the r12 preflight racing
-        a micro-batch against a commit)."""
-        import uuid as _uuid
-
-        tmp = f"{self._latest_file()}.tmp.{_uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            fh.write(str(version))
-        os.replace(tmp, self._latest_file())
-
     def latest_version(self) -> int:
-        try:
-            with open(self._latest_file()) as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return -1
+        # the snapshot dir is written before the hint, so the hint alone
+        # is the commit here: no forward walk
+        return log.latest_hint(self.path)
 
     def _commit(self, df: DataFrame, version: int) -> None:
         df.write.mode("overwrite").parquet(f"{self.path}/v={version}")
         os.makedirs(self.path, exist_ok=True)
-        self._publish_latest(version)
+        log.publish_latest(self.path, version)
 
     # -- reference operator surface ------------------------------------
     def overwrite(self, df: DataFrame) -> int:
@@ -202,7 +194,7 @@ class ParquetVersionedTable:
 
         if retain_last < 1:
             # Delta never vacuums the live snapshot: retain_last=0 would
-            # delete every version while _LATEST still points at one
+            # delete every version while the latest hint points at one
             raise ValueError(f"retain_last={retain_last} must be >= 1")
         latest = self.latest_version()
         keep = set(range(max(0, latest - retain_last + 1), latest + 1))
@@ -217,21 +209,10 @@ class ParquetVersionedTable:
         """O16: symlink-format manifest (list of data files of the latest
         snapshot, for external Hive/Presto/Athena catalogs)."""
         version_dir = f"{self.path}/v={self.latest_version()}"
-        files = sorted(
-            os.path.join(version_dir, f)
-            for f in os.listdir(version_dir)
-            if f.endswith(".parquet")
+        return _write_symlink_manifest(
+            self.path,
+            [os.path.join(version_dir, f) for f in log.parquet_files(version_dir)],
         )
-        manifest_dir = os.path.join(self.path, "_symlink_format_manifest")
-        os.makedirs(manifest_dir, exist_ok=True)
-        manifest = os.path.join(manifest_dir, "manifest")
-        import uuid as _uuid
-
-        tmp = f"{manifest}.tmp.{_uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            fh.write("\n".join(files) + "\n")
-        os.replace(tmp, manifest)  # external catalogs never see a torn list
-        return manifest
 
 
 class ManifestVersionedTable:
@@ -244,8 +225,9 @@ class ManifestVersionedTable:
     Layout::
 
         <path>/data/<commit-uuid>/mvt_bucket=<b>/part-*.parquet
-        <path>/_manifests/v=<N>.json   # bucket -> [data dirs], schema, key
-        <path>/_LATEST
+        plus the version log (one manifest per version — bucket ->
+        [data dirs], schema, key — and a latest-version hint), whose
+        format manifest_log owns
 
     Each bucket maps to a LIST of directories: ``append`` (the dominant
     ingestion commit) just writes its new files and extends the lists —
@@ -266,9 +248,13 @@ class ManifestVersionedTable:
     find buckets containing matches, then rewrites only those. VACUUM
     reference-counts bucket directories across surviving manifests and
     removes only unshared ones — exactly Delta's log-then-vacuum
-    contract. Same single-writer commit discipline as the snapshot
-    façade (the reference's job is single-writer); the real transaction
-    log for concurrent writers remains delta-spark's job."""
+    contract.
+
+    Concurrent writers are safe: every commit is a put-if-absent link of
+    the next version's manifest (``manifest_log.commit``), so a writer
+    that loses the race gets ConcurrentWriteError instead of clobbering
+    the winner, and ``commit_staged`` rebases a staged transaction onto
+    the versions committed since it read, when they do not conflict."""
 
     def __init__(
         self, spark: SparkSession, path: str, key: str, n_buckets: int = 16
@@ -283,50 +269,18 @@ class ManifestVersionedTable:
         self.key = key
         self.n_buckets = n_buckets
 
-    # -- version bookkeeping -------------------------------------------
-    def _latest_file(self) -> str:
-        return os.path.join(self.path, "_LATEST")
-
+    # -- version bookkeeping (format: manifest_log) ---------------------
     def _publish_latest(self, version: int) -> None:
-        """Atomically repoint _LATEST (temp file + os.replace): a plain
-        truncate-write leaves a window where a concurrent reader — the
-        stream sources poll _LATEST every trigger — sees an EMPTY file
-        and crashes on int('') (caught live by the r12 preflight racing
-        a micro-batch against a commit)."""
-        import uuid as _uuid
-
-        tmp = f"{self._latest_file()}.tmp.{_uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            fh.write(str(version))
-        os.replace(tmp, self._latest_file())
+        log.publish_latest(self.path, version)
 
     def latest_version(self) -> int:
-        try:
-            with open(self._latest_file()) as fh:
-                v = int(fh.read().strip())
-        except FileNotFoundError:
-            v = -1
-        # _LATEST is a HINT, not the commit (Delta's _last_checkpoint
-        # semantics): the atomic manifest link IS the commit. A writer
-        # killed between link and pointer replace leaves a durable commit
-        # the pointer misses — walk forward to self-heal (r13 crash-
-        # injection sweep; O(1) extra stat when the pointer is current).
-        # The next successful commit repairs the pointer itself.
-        while os.path.exists(self._manifest_path(v + 1)):
-            v += 1
-        return v
+        return log.latest_version(self.path)
 
     def _manifest_path(self, version: int) -> str:
-        return os.path.join(self.path, "_manifests", f"v={version}.json")
+        return log.manifest_path(self.path, version)
 
     def _manifest(self, version: int) -> dict:
-        import json as _json
-
-        try:
-            with open(self._manifest_path(version)) as fh:
-                manifest = _json.load(fh)
-        except FileNotFoundError:
-            raise ValueError(f"version {version} does not exist") from None
+        manifest = log.read_manifest(self.path, version)
         # the on-disk layout wins over constructor defaults: a reopened
         # handle must bucket rows exactly as the data was written, or
         # merges would scan the wrong directories and silently duplicate
@@ -340,36 +294,11 @@ class ManifestVersionedTable:
         return manifest
 
     def _commit_manifest(self, manifest: dict, version: int) -> None:
-        """Atomic put-if-absent commit (Delta's transaction-log contract,
-        optimistic concurrency): the manifest is staged to a temp file
-        and published with ``os.link``, which fails atomically if another
-        writer already committed this version — the loser gets a loud
-        ConcurrentWriteError (re-read and retry on fresh state) instead
-        of silently clobbering the winner's commit. Data files are never
+        """Atomic put-if-absent commit (raises ConcurrentWriteError when
+        another writer took ``version``). Data files are never
         contended: every writer stages under its own uuid commit dir, so
         an aborted commit leaves only unreferenced files for vacuum."""
-        import datetime as _dt
-        import json as _json
-        import uuid as _uuid
-
-        info = dict(manifest.get("commit_info", {}))
-        info.setdefault("ts", _dt.datetime.now().astimezone().isoformat())
-        manifest = dict(manifest, commit_info=info)
-        os.makedirs(os.path.join(self.path, "_manifests"), exist_ok=True)
-        target = self._manifest_path(version)
-        staged = f"{target}.tmp.{_uuid.uuid4().hex[:8]}"
-        with open(staged, "w") as fh:
-            _json.dump(manifest, fh)
-        try:
-            os.link(staged, target)  # atomic on one filesystem
-        except FileExistsError:
-            raise ConcurrentWriteError(
-                f"version {version} of {self.path} was committed by a "
-                "concurrent writer; re-read the table and retry"
-            ) from None
-        finally:
-            os.unlink(staged)
-        self._publish_latest(version)
+        log.commit(self.path, version, manifest)
 
     def _bucket_expr(self, n_buckets: int | None = None):
         # string-cast first so the bucket of a key value is stable across
@@ -540,10 +469,7 @@ class ManifestVersionedTable:
         return written, written_next
 
     def _abs(self, d: str) -> str:
-        """Resolve a manifest-recorded bucket dir against the table root
-        (manifests store root-relative paths; absolute entries from
-        pre-relative manifests still resolve as themselves)."""
-        return d if os.path.isabs(d) else os.path.join(self.path, d)
+        return log.resolve(self.path, d)
 
     @staticmethod
     def _align_columns(df: DataFrame, manifest: dict) -> DataFrame:
@@ -587,24 +513,8 @@ class ManifestVersionedTable:
             )
         return df if df.columns == cols else df.select(*cols)
 
-    @staticmethod
-    def _bucket_dirs(
-        buckets: dict[str, list[str]], subset: list[str] | None = None
-    ) -> list[str]:
-        keys = sorted(buckets) if subset is None else [
-            b for b in subset if b in buckets
-        ]
-        return [d for b in keys for d in buckets[b]]
-
-    @classmethod
-    def _all_dirs(cls, manifest: dict) -> list[str]:
-        """Every data dir a manifest references: the current-generation
-        bucket map plus, mid-rebucket, the already-migrated target-
-        generation map (``buckets_next``). Full scans and reference
-        counting must use THIS, not ``buckets`` alone."""
-        return cls._bucket_dirs(manifest["buckets"]) + cls._bucket_dirs(
-            manifest.get("buckets_next", {})
-        )
+    _bucket_dirs = staticmethod(log.bucket_dirs)
+    _all_dirs = staticmethod(log.all_dirs)
 
     def _refuse_mid_rebucket(self, manifest: dict, what: str) -> None:
         """The few operations still undefined while an incremental
@@ -732,9 +642,7 @@ class ManifestVersionedTable:
 
         d = self._abs(rel_dir)
         per_file: dict[str, dict[str, list]] = {}
-        for fname in sorted(os.listdir(d)):
-            if not fname.endswith(".parquet"):
-                continue
+        for fname in log.parquet_files(d):
             lo: dict[str, object] = {}
             hi: dict[str, object] = {}
             bad: set[str] = set()
@@ -797,11 +705,10 @@ class ManifestVersionedTable:
         nbytes = 0
         for d in self._all_dirs(manifest):
             ad = self._abs(d)
-            for fname in os.listdir(ad):
-                if fname.endswith(".parquet"):
-                    fp = os.path.join(ad, fname)
-                    rows += pq.ParquetFile(fp).metadata.num_rows
-                    nbytes += os.path.getsize(fp)
+            for fname in log.parquet_files(ad):
+                fp = os.path.join(ad, fname)
+                rows += pq.ParquetFile(fp).metadata.num_rows
+                nbytes += os.path.getsize(fp)
         return rows, nbytes
 
     def _commit_with_stats(
@@ -2147,15 +2054,7 @@ class ManifestVersionedTable:
         return manifest, buckets
 
     def history(self) -> list[int]:
-        try:
-            found = sorted(
-                int(name[2:-5])
-                for name in os.listdir(os.path.join(self.path, "_manifests"))
-                if name.startswith("v=") and name.endswith(".json")
-            )
-        except FileNotFoundError:
-            return []
-        return found
+        return log.versions(self.path)
 
     def describe_history(self) -> list[dict]:
         """Delta DESCRIBE HISTORY analogue: newest-first commit metadata —
@@ -2224,7 +2123,7 @@ class ManifestVersionedTable:
 
         if retain_last < 1:
             # Delta never vacuums the live snapshot: retain_last=0 would
-            # delete every manifest and all data while _LATEST still
+            # delete every manifest and all data while the latest hint still
             # points at the now-missing version (a bricked table)
             raise ValueError(f"retain_last={retain_last} must be >= 1")
         latest = self.latest_version()
@@ -2815,10 +2714,9 @@ class ManifestVersionedTable:
         n_bytes = 0
         for rel in self._all_dirs(m):
             d = self._abs(rel)
-            for name in os.listdir(d):
-                if name.endswith(".parquet"):
-                    n_files += 1
-                    n_bytes += os.path.getsize(os.path.join(d, name))
+            for name in log.parquet_files(d):
+                n_files += 1
+                n_bytes += os.path.getsize(os.path.join(d, name))
         return {
             "format": "parquet-manifest",
             "location": self.path,
@@ -2841,24 +2739,11 @@ class ManifestVersionedTable:
         """O16: symlink-format manifest — the latest version's parquet
         file list, straight from its bucket directories."""
         manifest = self._manifest(self.latest_version())
-        files: list[str] = []
-        for rel in self._all_dirs(manifest):
-            d = self._abs(rel)
-            files.extend(
-                os.path.join(d, f)
-                for f in sorted(os.listdir(d))
-                if f.endswith(".parquet")
-            )
-        manifest_dir = os.path.join(self.path, "_symlink_format_manifest")
-        os.makedirs(manifest_dir, exist_ok=True)
-        out = os.path.join(manifest_dir, "manifest")
-        import uuid as _uuid
-
-        tmp = f"{out}.tmp.{_uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            fh.write("\n".join(files) + "\n")
-        os.replace(tmp, out)  # external catalogs never see a torn list
-        return out
+        dirs = [self._abs(rel) for rel in self._all_dirs(manifest)]
+        return _write_symlink_manifest(
+            self.path,
+            [os.path.join(d, f) for d in dirs for f in log.parquet_files(d)],
+        )
 
     def shallow_clone(
         self, dst_path: str, version_as_of: int | None = None
@@ -3001,8 +2886,9 @@ class ManifestVersionedTable:
 
     def export_delta_log(self) -> str:
         """Write the CURRENT version as a ``_delta_log`` in the public
-        Delta transaction-log format (protocol 1/2, one commit: protocol
-        + metaData + an add per data file) inside the table root — the
+        Delta transaction-log format (one commit: protocol + metaData +
+        txn watermarks + an add per data file — the same actions the
+        tail export writes for its base) inside the table root — the
         interop bridge outward: any Delta engine (including
         operators/deltalog.DeltaLogReader, round-trip-tested) can then
         read this table's snapshot directly; the data files are shared,
@@ -3011,14 +2897,15 @@ class ManifestVersionedTable:
         not update it — re-export on whatever cadence consumers need.
         Outstanding deletion vectors refuse (exported files alone would
         resurrect deleted rows — run optimize() first to materialize
-        them); the txn/stat layers are manifest-side refinements Delta
-        readers don't need."""
-        import json as _json
+        them); file stats are a manifest-side refinement Delta readers
+        don't need."""
         import shutil as _sh
 
-        from pyspark.sql.types import StructType
-
-        manifest = self._manifest(self.latest_version())
+        # ONE read of the version: the resume state must name exactly
+        # the manifest whose files the log holds, or a commit landing
+        # mid-export would be marked exported and never reach the log
+        version = self.latest_version()
+        manifest = self._manifest(version)
         if manifest.get("deletion_vectors"):
             raise ValueError(
                 "outstanding deletion vectors; optimize() first so the "
@@ -3027,53 +2914,10 @@ class ManifestVersionedTable:
         log_dir = os.path.join(self.path, "_delta_log")
         _sh.rmtree(log_dir, ignore_errors=True)
         os.makedirs(log_dir)
-        actions = [
-            self._delta_protocol_action(manifest),
-            self._delta_metadata_action(manifest),
-        ]
         dir_files: dict[str, list[str]] = {}
-        for rel in self._all_dirs(manifest):
-            d = self._abs(rel)
-            names = [n for n in sorted(os.listdir(d)) if n.endswith(".parquet")]
-            dir_files[rel] = names
-            for fname in names:
-                full = os.path.join(d, fname)
-                actions.append(
-                    {
-                        "add": {
-                            "path": os.path.join(rel, fname),
-                            "partitionValues": {},
-                            "size": os.path.getsize(full),
-                            "modificationTime": int(
-                                os.path.getmtime(full) * 1000
-                            ),
-                            "dataChange": True,
-                        }
-                    }
-                )
-        import uuid as _uuid
-
-        commit = os.path.join(log_dir, f"{0:020d}.json")
-        tmp = f"{commit}.tmp.{_uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            for a in actions:
-                fh.write(_json.dumps(a) + "\n")
-        os.replace(tmp, commit)  # readers never see a torn log entry
-        state_path = os.path.join(log_dir, "_mvt_export_state")
-        s_tmp = f"{state_path}.tmp.{_uuid.uuid4().hex[:8]}"
-        with open(s_tmp, "w") as fh:
-            _json.dump(
-                {
-                    "manifest_version": self.latest_version(),
-                    "log_version": 0,
-                    # per-dir file index: a later tail export derives
-                    # removes from this even after the dir is vacuumed
-                    "dir_files": dir_files,
-                },
-                fh,
-            )
-        os.replace(s_tmp, state_path)
-        return commit
+        actions = [self._delta_protocol_action(manifest)]
+        actions += self._delta_actions_for_diff(None, manifest, dir_files)
+        return _publish_delta_commit(log_dir, 0, actions, version, dir_files)
 
     # -- incremental (tailable) Delta-log export ------------------------
     def _delta_writer_version(self, m: dict) -> int:
@@ -3182,11 +3026,8 @@ class ManifestVersionedTable:
                 # but LOUDLY — a vacuumed dir with no index means the
                 # removes are unrecoverable and the exported log would
                 # keep phantom adds live.
-                d = self._abs(rel)
                 try:
-                    names = sorted(
-                        n for n in os.listdir(d) if n.endswith(".parquet")
-                    )
+                    names = log.parquet_files(self._abs(rel))
                 except FileNotFoundError:
                     raise ValueError(
                         f"dropped dir {rel} was already vacuumed and the "
@@ -3211,14 +3052,13 @@ class ManifestVersionedTable:
         for rel in sorted(cur_dirs - prev_dirs):
             d = self._abs(rel)
             try:
-                listing = sorted(os.listdir(d))
+                names = log.parquet_files(d)
             except FileNotFoundError:
                 raise ValueError(
                     f"dir {rel} added by the exported version was already "
                     "vacuumed; its files cannot be referenced by the log "
                     "— re-export from a snapshot of a live version"
                 ) from None
-            names = [n for n in listing if n.endswith(".parquet")]
             dir_files[rel] = names
             for fname in names:
                 full = os.path.join(d, fname)
@@ -3309,19 +3149,7 @@ class ManifestVersionedTable:
             # "nothing exported yet", and the resume regenerates log 0
             # deterministically; without it the dir is indistinguishable
             # from a pre-r11 layout and re-export refuses.
-            import uuid as _uuid
-
-            s_tmp = f"{state_path}.tmp.{_uuid.uuid4().hex[:8]}"
-            with open(s_tmp, "w") as fh:
-                _json.dump(
-                    {
-                        "manifest_version": -1,
-                        "log_version": -1,
-                        "dir_files": {},
-                    },
-                    fh,
-                )
-            os.replace(s_tmp, state_path)
+            _write_export_state(log_dir, -1, -1, {})
         written: list[str] = []
         for v in range(from_mv + 1, latest + 1):
             if not os.path.exists(self._manifest_path(v)):
@@ -3339,38 +3167,55 @@ class ManifestVersionedTable:
             if m_prev is None:
                 actions.append(self._delta_protocol_action(m_v))
             actions.extend(self._delta_actions_for_diff(m_prev, m_v, dir_files))
-            # stage + atomic publish for BOTH files (r13 crash-injection
-            # sweep): a truncate-write crash would leave a TORN log JSON
-            # that tailing Delta readers choke on, or a torn state file
-            # that bricks the next re-export; with tmp + os.replace a
-            # crash at any instant leaves the previous state intact (the
-            # same fix the _LATEST pointer got in r12). The log JSON is
-            # published BEFORE the state file, so a crash between them
-            # merely re-exports that version idempotently (same content,
-            # same name) on the next call.
-            import uuid as _uuid
-
-            commit = os.path.join(log_dir, f"{next_log:020d}.json")
-            tmp = f"{commit}.tmp.{_uuid.uuid4().hex[:8]}"
-            with open(tmp, "w") as fh:
-                for a in actions:
-                    fh.write(_json.dumps(a) + "\n")
-            os.replace(tmp, commit)
-            written.append(commit)
-            s_tmp = f"{state_path}.tmp.{_uuid.uuid4().hex[:8]}"
-            with open(s_tmp, "w") as fh:
-                _json.dump(
-                    {
-                        "manifest_version": v,
-                        "log_version": next_log,
-                        "dir_files": dir_files,
-                    },
-                    fh,
-                )
-            os.replace(s_tmp, state_path)
+            written.append(
+                _publish_delta_commit(log_dir, next_log, actions, v, dir_files)
+            )
             m_prev = m_v
             next_log += 1
         return written
+
+
+def _write_export_state(
+    log_dir: str,
+    manifest_version: int,
+    log_version: int,
+    dir_files: dict[str, list[str]],
+) -> None:
+    """The Delta exporter's resume state: the manifest version the log
+    mirrors, its newest log entry, and the per-dir file index a later
+    tail export derives removes from (even after the dir is vacuumed)."""
+    import json as _json
+
+    log.atomic_write(
+        os.path.join(log_dir, "_mvt_export_state"),
+        _json.dumps(
+            {
+                "manifest_version": manifest_version,
+                "log_version": log_version,
+                "dir_files": dir_files,
+            }
+        ),
+    )
+
+
+def _publish_delta_commit(
+    log_dir: str,
+    log_version: int,
+    actions: list[dict],
+    manifest_version: int,
+    dir_files: dict[str, list[str]],
+) -> str:
+    """Publish Delta log entry ``log_version`` and THEN the exporter's
+    resume state, each atomically: a crash at any instant leaves
+    either the previous state (the entry re-exports idempotently,
+    same content, same name) or both files whole — never a torn log
+    JSON a tailing reader would choke on."""
+    import json as _json
+
+    commit = os.path.join(log_dir, f"{log_version:020d}.json")
+    log.atomic_write(commit, "".join(_json.dumps(a) + "\n" for a in actions))
+    _write_export_state(log_dir, manifest_version, log_version, dir_files)
+    return commit
 
 
 class DeltaVersionedTable:
@@ -3465,7 +3310,7 @@ def version_diff(table, key: str, from_version: int, to_version: int) -> DataFra
     versions; anything else falls back to the full-snapshot diff.
     """
     pre = post = None
-    if hasattr(table, "_manifest") and hasattr(table, "_bucket_dirs"):
+    if isinstance(table, ManifestVersionedTable):
         m_from = table._manifest(from_version)
         m_to = table._manifest(to_version)
         if (

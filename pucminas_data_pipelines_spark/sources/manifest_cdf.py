@@ -42,40 +42,15 @@ not the table.
 
 from __future__ import annotations
 
-import json
-import os
 from collections.abc import Iterator, Sequence
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
+from pyspark.sql.datasource import DataSource, InputPartition
+
+from pucminas_data_pipelines_spark import manifest_log as log
+from pucminas_data_pipelines_spark.sources.manifest_stream import (
+    ManifestLogReader,
+    _open_table,
 )
-
-
-def _manifest(path: str, version: int) -> dict:
-    with open(os.path.join(path, "_manifests", f"v={version}.json")) as fh:
-        return json.load(fh)
-
-
-def _latest_version(path: str) -> int:
-    try:
-        with open(os.path.join(path, "_LATEST")) as fh:
-            v = int(fh.read().strip())
-    except FileNotFoundError:
-        v = -1
-    # _LATEST is a hint; the atomic manifest link is the commit — walk
-    # forward so a writer killed before the pointer flip still streams
-    # (mirrors ManifestVersionedTable.latest_version, r13)
-    while os.path.exists(
-        os.path.join(path, "_manifests", f"v={v + 1}.json")
-    ):
-        v += 1
-    return v
-
-
-def _abs(root: str, d: str) -> str:
-    return d if os.path.isabs(d) else os.path.join(root, d)
 
 
 def _arrow_target(manifest: dict):
@@ -169,12 +144,10 @@ class _DVDeletePartition(InputPartition):
         self.version = version
 
 
-class ManifestCDFStreamReader(DataSourceStreamReader):
+class ManifestCDFStreamReader(ManifestLogReader):
     def __init__(self, options: dict):
-        self.path = os.path.abspath(options["path"].rstrip("/"))
-        latest = _latest_version(self.path)
-        if latest < 0:
-            raise ValueError(f"no manifest table at {self.path}")
+        super().__init__(options)
+        latest = self.opened_at
         self.start_version = int(options.get("startingVersion", latest))
         if self.start_version < -1 or self.start_version > latest:
             raise ValueError(
@@ -182,24 +155,6 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
                 f"pass -1 for full-history replay, or a version in "
                 f"[0, {latest}] (latest commit) to emit changes after it"
             )
-        # Delta maxFilesPerTrigger analogue at commit grain (see
-        # manifest_stream.py): bound how many commits one micro-batch
-        # diffs, so a CDF consumer starting against a long backlog
-        # drains it in bounded batches. 0/absent = unbounded.
-        self.max_versions = int(options.get("maxVersionsPerTrigger", 0))
-        self._progress: int | None = None
-
-    def _note_progress(self, version: int) -> None:
-        if self._progress is None or version > self._progress:
-            self._progress = version
-
-    def _rate_limited(self, latest: int) -> int:
-        # restart-safe: cap only once this process observed an offset
-        # (initialOffset or a checkpointed start) — a capped offset
-        # behind an unseen checkpoint would regress the offset log
-        if self.max_versions > 0 and self._progress is not None:
-            return min(latest, self._progress + self.max_versions)
-        return latest
 
     # -- offsets ---------------------------------------------------------
     def initialOffset(self) -> dict:
@@ -213,21 +168,18 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
         self._note_progress(self.start_version)
         return {"version": self.start_version}
 
-    def latestOffset(self) -> dict:
-        return {"version": self._rate_limited(_latest_version(self.path))}
-
     # -- planning --------------------------------------------------------
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         self._note_progress(start["version"])  # learn the resumed offset
         out: list[InputPartition] = []
         for v in range(start["version"] + 1, end["version"] + 1):
-            m_v = _manifest(self.path, v)
+            m_v = log.read_manifest(self.path, v)
             if v == 0:
                 # full-history replay (startingVersion=-1): version 0
                 # diffs against the empty table — every dir is inserts
                 m_prev = dict(m_v, buckets={}, deletion_vectors=[])
             else:
-                m_prev = _manifest(self.path, v - 1)
+                m_prev = log.read_manifest(self.path, v - 1)
             if m_prev["columns"] != m_v["columns"]:
                 raise ValueError(
                     f"schema changed at version {v}; the change feed is "
@@ -256,7 +208,7 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
             for dv_rel in cur_dvs[len(prev_dvs):]:
                 out.append(
                     _DVDeletePartition(
-                        self.path, _abs(self.path, dv_rel), target, v
+                        self.path, log.resolve(self.path, dv_rel), target, v
                     )
                 )
             bf, bt = m_prev["buckets"], m_v["buckets"]
@@ -269,7 +221,7 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
                     for d in post[len(pre):]:
                         out.append(
                             _InsertDirPartition(
-                                _abs(self.path, d), target, v
+                                log.resolve(self.path, d), target, v
                             )
                         )
                     continue
@@ -282,8 +234,8 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
                     )
                 out.append(
                     _BucketDiffPartition(
-                        [_abs(self.path, d) for d in pre],
-                        [_abs(self.path, d) for d in post],
+                        [log.resolve(self.path, d) for d in pre],
+                        [log.resolve(self.path, d) for d in post],
                         key,
                         target,
                         v,
@@ -318,22 +270,15 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
         import pyarrow as pa
         import pyarrow.dataset as ds
 
-        dv = ds.dataset(p.dv_abs, format="parquet").to_table()
-        by_file: dict[str, list[int]] = {}
-        for f, r in zip(
-            dv.column("__dv_file").to_pylist(),
-            dv.column("__dv_row").to_pylist(),
-        ):
-            by_file.setdefault(f, []).append(r)
         pieces = []
-        for f, rows in sorted(by_file.items()):
-            dset = ds.dataset(_abs(p.root, f), format="parquet")
+        for f, rows in sorted(log.dv_rows(p.root, [p.dv_abs]).items()):
+            dset = ds.dataset(log.resolve(p.root, f), format="parquet")
             present = [c for c in p.schema.names if c in dset.schema.names]
             # take by position FIRST (row indices are per-file), then
             # conform to the manifest-pinned schema (pre-evolution files
             # null-fill later-added columns instead of ArrowInvalid)
             pieces.append(
-                _conform(dset.to_table(columns=present).take(sorted(rows)), p.schema)
+                _conform(dset.to_table(columns=present).take(rows), p.schema)
             )
         if not pieces:
             return iter(())
@@ -405,11 +350,6 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
             out.extend(self._stamped(tbl, kind, p.version))
         return iter(out)
 
-    def commit(self, end: dict) -> None:
-        # offsets live in the stream checkpoint; advance the local
-        # watermark so the rate limiter moves batch by batch
-        self._note_progress(end["version"])
-
 
 class ManifestCDFDataSource(DataSource):
     """Usage::
@@ -433,11 +373,8 @@ class ManifestCDFDataSource(DataSource):
             StructType,
         )
 
-        path = os.path.abspath(self.options["path"].rstrip("/"))
-        latest = _latest_version(path)
-        if latest < 0:
-            raise ValueError(f"no manifest table at {path}")
-        base = StructType.fromJson(_manifest(path, latest)["schema"])
+        path, latest = _open_table(self.options)
+        base = StructType.fromJson(log.read_manifest(path, latest)["schema"])
         return StructType(
             list(base.fields)
             + [

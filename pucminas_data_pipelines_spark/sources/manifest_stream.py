@@ -33,7 +33,6 @@ files' bytes per trigger.
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Iterator, Sequence
 
@@ -43,35 +42,62 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from pucminas_data_pipelines_spark import manifest_log as log
+
 _APPEND_OK = {"APPEND"}
 
 
-def _manifest(path: str, version: int) -> dict:
-    with open(os.path.join(path, "_manifests", f"v={version}.json")) as fh:
-        return json.load(fh)
+def _open_table(options: dict) -> tuple[str, int]:
+    """(absolute table root, latest version) for a source's ``path``
+    option; refuses a path that holds no manifest table."""
+    path = os.path.abspath(options["path"].rstrip("/"))
+    latest = log.latest_version(path)
+    if latest < 0:
+        raise ValueError(f"no manifest table at {path}")
+    return path, latest
 
 
-def _latest_version(path: str) -> int:
-    try:
-        with open(os.path.join(path, "_LATEST")) as fh:
-            v = int(fh.read().strip())
-    except FileNotFoundError:
-        v = -1
-    # _LATEST is a hint; the atomic manifest link is the commit — walk
-    # forward so a writer killed before the pointer flip still streams
-    # (mirrors ManifestVersionedTable.latest_version, r13)
-    while os.path.exists(
-        os.path.join(path, "_manifests", f"v={v + 1}.json")
-    ):
-        v += 1
-    return v
+class ManifestLogReader(DataSourceStreamReader):
+    """Offset protocol shared by the manifest stream sources: offsets
+    are commit versions, and a batch ends at the table's latest version
+    capped by ``maxVersionsPerTrigger`` (Delta's maxFilesPerTrigger at
+    commit grain: a stream starting against a long backlog drains it in
+    bounded batches; 0/absent = unbounded)."""
 
+    def __init__(self, options: dict):
+        self.path, self.opened_at = _open_table(options)
+        raw = options.get("maxVersionsPerTrigger", 0)
+        if not str(raw).strip().isdecimal():
+            raise ValueError(
+                f"maxVersionsPerTrigger={raw!r} must be a non-negative "
+                "integer (0 = unbounded)"
+            )
+        self.max_versions = int(raw)
+        self._progress: int | None = None  # newest offset seen locally
 
-def _dirs(manifest: dict) -> list[str]:
-    # union both generations: a mid-rebucket snapshot's rows live in
-    # "buckets" (old gen) plus "buckets_next" (already-migrated)
-    maps = [manifest["buckets"], manifest.get("buckets_next", {})]
-    return [d for m in maps for b in sorted(m) for d in m[b]]
+    def _note_progress(self, version: int) -> None:
+        if self._progress is None or version > self._progress:
+            self._progress = version
+
+    def _rate_limited(self, latest: int) -> int:
+        """Cap the batch end at progress + maxVersionsPerTrigger.
+        RESTART-SAFE by construction: the cap applies only once this
+        process has observed an offset (initialOffset on a fresh start,
+        or the checkpointed start passed to partitions()); the first
+        trigger after a checkpoint resume therefore runs uncapped —
+        returning a capped offset BEHIND an unseen checkpoint would
+        regress the offset log and re-emit committed versions."""
+        if self.max_versions > 0 and self._progress is not None:
+            return min(latest, self._progress + self.max_versions)
+        return latest
+
+    def latestOffset(self) -> dict:
+        return {"version": self._rate_limited(log.latest_version(self.path))}
+
+    def commit(self, end: dict) -> None:
+        # offsets live in the stream checkpoint; remember the committed
+        # watermark so the rate limiter advances batch by batch
+        self._note_progress(end["version"])
 
 
 class _DirPartition(InputPartition):
@@ -102,70 +128,25 @@ class _DirPartition(InputPartition):
         self.schema = schema
 
 
-class ManifestStreamReader(DataSourceStreamReader):
-    def __init__(self, options: dict):
-        self.path = os.path.abspath(options["path"].rstrip("/"))
-        if _latest_version(self.path) < 0:
-            raise ValueError(f"no manifest table at {self.path}")
-        # Delta maxFilesPerTrigger analogue at commit grain: bound how
-        # many versions one micro-batch may cover, so a stream starting
-        # against a long backlog drains it in bounded batches instead
-        # of planning months of commits into one. 0/absent = unbounded.
-        self.max_versions = int(options.get("maxVersionsPerTrigger", 0))
-        self._progress: int | None = None  # newest offset seen locally
-
-    def _note_progress(self, version: int) -> None:
-        if self._progress is None or version > self._progress:
-            self._progress = version
-
-    def _rate_limited(self, latest: int) -> int:
-        """Cap the batch end at progress + maxVersionsPerTrigger.
-        RESTART-SAFE by construction: the cap applies only once this
-        process has observed an offset (initialOffset on a fresh start,
-        or the checkpointed start passed to partitions()); the first
-        trigger after a checkpoint resume therefore runs uncapped —
-        returning a capped offset BEHIND an unseen checkpoint would
-        regress the offset log and re-emit committed versions."""
-        if self.max_versions > 0 and self._progress is not None:
-            return min(latest, self._progress + self.max_versions)
-        return latest
-
-    # -- offset protocol ------------------------------------------------
+class ManifestStreamReader(ManifestLogReader):
     def initialOffset(self) -> dict:
         # version -1 = "before the table existed": the first batch emits
         # the full snapshot of whatever version latestOffset sees first.
         self._note_progress(-1)
         return {"version": -1}
 
-    def latestOffset(self) -> dict:
-        return {"version": self._rate_limited(_latest_version(self.path))}
-
     def _dv_rows_by_dir(
         self, manifest: dict
     ) -> dict[str, dict[str, list[int]]]:
-        """Read the manifest's DV sidecars (driver-side, match-sized —
-        the same rows the batch reader broadcasts) and group the deleted
-        positions as rel_dir -> file name -> sorted row indices, so each
-        snapshot partition ships only its own directory's deletes."""
-        import pyarrow.dataset as ds
-
+        """The manifest's DV sidecars (driver-side, match-sized — the
+        same rows the batch reader broadcasts) grouped as rel_dir ->
+        file name -> sorted row indices, so each snapshot partition
+        ships only its own directory's deletes."""
         out: dict[str, dict[str, list[int]]] = {}
-        dvs = manifest.get("deletion_vectors", [])
-        if not dvs:
-            return out
-        for p in dvs:
-            dv = ds.dataset(
-                os.path.join(self.path, p), format="parquet"
-            ).to_table()
-            for f, r in zip(
-                dv.column("__dv_file").to_pylist(),
-                dv.column("__dv_row").to_pylist(),
-            ):
-                d, name = os.path.split(f)
-                out.setdefault(d, {}).setdefault(name, []).append(r)
-        for files in out.values():
-            for rows in files.values():
-                rows.sort()
+        dvs = log.dv_rows(self.path, manifest.get("deletion_vectors", []))
+        for f, rows in dvs.items():
+            d, name = os.path.split(f)
+            out.setdefault(d, {})[name] = rows
         return out
 
     # -- planning ---------------------------------------------------------
@@ -173,10 +154,10 @@ class ManifestStreamReader(DataSourceStreamReader):
         """Directories added in versions (start_v, end_v], plus the final
         column layout. Snapshot semantics when start_v < 0 (initial
         batch); append-only guard for tailed commits."""
-        end_m = _manifest(self.path, end_v)
+        end_m = log.read_manifest(self.path, end_v)
         if start_v < 0:
-            return _dirs(end_m), end_m["columns"]
-        start_m = _manifest(self.path, start_v)
+            return log.all_dirs(end_m), end_m["columns"]
+        start_m = log.read_manifest(self.path, start_v)
         if start_m["columns"] != end_m["columns"]:
             raise ValueError(
                 "schema changed between streamed versions "
@@ -192,7 +173,7 @@ class ManifestStreamReader(DataSourceStreamReader):
         # cur_dvs[len(prev_dvs):] diff.
         base_dvs = start_m.get("deletion_vectors", [])
         for v in range(start_v + 1, end_v + 1):
-            m = _manifest(self.path, v)
+            m = log.read_manifest(self.path, v)
             op = m.get("commit_info", {}).get("operation", "UNKNOWN")
             if op not in _APPEND_OK:
                 raise ValueError(
@@ -207,8 +188,8 @@ class ManifestStreamReader(DataSourceStreamReader):
                     "relative to the stream's baseline; append-only "
                     "streaming cannot subtract rows already emitted"
                 )
-        prev = set(_dirs(start_m))
-        added = [d for d in _dirs(end_m) if d not in prev]
+        prev = set(log.all_dirs(start_m))
+        added = [d for d in log.all_dirs(end_m) if d not in prev]
         return added, end_m["columns"]
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
@@ -227,12 +208,12 @@ class ManifestStreamReader(DataSourceStreamReader):
                 _arrow_target,
             )
 
-            end_m = _manifest(self.path, end["version"])
+            end_m = log.read_manifest(self.path, end["version"])
             dv_by_dir = self._dv_rows_by_dir(end_m)
             schema = _arrow_target(end_m)
         return [
             _DirPartition(
-                d if os.path.isabs(d) else os.path.join(self.path, d),
+                log.resolve(self.path, d),
                 columns,
                 dv_by_dir.get(d),
                 schema,
@@ -294,11 +275,6 @@ class ManifestStreamReader(DataSourceStreamReader):
                 tbl = _conform(tbl, partition.schema)
             yield from tbl.to_batches()
 
-    def commit(self, end: dict) -> None:
-        # offsets live in the stream checkpoint; remember the committed
-        # watermark so the rate limiter advances batch by batch
-        self._note_progress(end["version"])
-
 
 class ManifestStreamDataSource(DataSource):
     """Usage::
@@ -314,11 +290,8 @@ class ManifestStreamDataSource(DataSource):
     def schema(self):
         from pyspark.sql.types import StructType
 
-        path = os.path.abspath(self.options["path"].rstrip("/"))
-        latest = _latest_version(path)
-        if latest < 0:
-            raise ValueError(f"no manifest table at {path}")
-        return StructType.fromJson(_manifest(path, latest)["schema"])
+        path, latest = _open_table(self.options)
+        return StructType.fromJson(log.read_manifest(path, latest)["schema"])
 
     def streamReader(self, schema) -> ManifestStreamReader:
         return ManifestStreamReader(self.options)
